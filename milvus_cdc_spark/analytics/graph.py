@@ -18,8 +18,8 @@ Design for 100 TB:
   (round 10, interleaved A/B at sf0.1: pagerank −17 %, triangles −25 %,
   LPA flat-to-better; same win class as the kcore rewrite): the frame
   skips InMemoryRelation's columnar materialization, its blocks die
-  with the returned DataFrame (ContextCleaner) instead of stranding in
-  a release ledger, and real sizes reach AQE. The trade is
+  with the returned DataFrame (ContextCleaner) instead of waiting for
+  the caller's ``clearCache()``, and real sizes reach AQE. The trade is
   replication: on a cluster, an executor loss fails-and-reruns the
   query — acceptable for fixed-round analytics reports.
 - All arithmetic is exact BIGINT in parts-per-10^12 units, so results are
@@ -37,27 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
 # Total score mass in integer units: parts-per-10^12 keeps 6+ significant
 # digits after 10^6-node graphs divide it up.
 MASS = 10**12
-
-# Since round 10 the graph operators carry NO persist ledger: every
-# cross-iteration frame is an eager localCheckpoint whose blocks the
-# ContextCleaner reclaims when the returned DataFrame is dropped, so
-# there is nothing to release. The registry and release function are
-# retained because callers (suite queries, tests) invoke the release
-# point unconditionally, and so a future operator that genuinely needs
-# a persist has the ledger ready.
-_GRAPH_CACHES = CacheRegistry("graph_caches")
-
-
-def release_graph_caches() -> None:
-    """Unpersist any graph-operator persists (no-op since round 10 —
-    the operators localCheckpoint instead of persisting)."""
-    _GRAPH_CACHES.release()
-
 
 def co_group_pairs(
     df: DataFrame,

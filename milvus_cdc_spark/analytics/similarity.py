@@ -22,41 +22,10 @@ analytics engine for the same data.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
 from milvus_cdc_spark.functions import vector as vecf
-
-# Frames persisted by index-build pipelines (ivf_pq_build) for reuse
-# across their consumers — the query path reads every build output at
-# least once, and an unpersisted build lineage re-runs the WHOLE
-# training (Lloyd x iterations, per-subspace PQ k-means) per consumer:
-# the scan-node audit counted 82 parquet scans in one unpersisted
-# ivf_pq query plan. Same contract as dedup/graph: the next build call
-# releases the prior query's frames; an early release only costs
-# recompute, never correctness.
-_SIM_CACHES = CacheRegistry("sim_caches")
-
-# mmr_rerank's pool persists live in their OWN registry: mmr is a
-# rerank stage that typically runs downstream of an index build whose
-# _SIM_CACHES outputs its caller may still be consuming lazily — a
-# shared release point at mmr entry would unpersist them mid-query
-# (ADVICE r7; only costs recompute, but defeats the persist the build
-# paid for). mmr releases its own prior pool at entry; the shared
-# release below still drains both, so the existing cleanup call sites
-# keep releasing everything.
-_MMR_CACHES = CacheRegistry("mmr_caches")
-
-
-def release_similarity_caches() -> None:
-    """Unpersist frames cached by prior index-build AND mmr calls."""
-    _SIM_CACHES.release()
-    _MMR_CACHES.release()
-
 
 def parallelize_expansion(df: DataFrame) -> DataFrame:
     """Round-robin repartition a small input ahead of a row-EXPANDING
@@ -344,12 +313,13 @@ def ivf_assign(
     (ties → lower centroid id). The corpus uses n_probe=1 (the IVF list a
     vector lives in); queries probe several lists.
 
-    ``with_rank=True`` (n_probe>1 only) keeps the probe position as a
-    ``probe_rank`` column (1 = nearest list). Because the top-n lists are
-    a PREFIX of the same (csim desc, centroid_id asc) ranking for every
-    n, one max-setting assignment with ranks serves a whole n_probe
-    sweep: filter ``probe_rank <= n`` reproduces the n-probe assignment
-    exactly (the r15 single-pass rewrite of ivf_nprobe_recall_curve).
+    ``with_rank=True`` keeps the probe position as an int ``probe_rank``
+    column (1 = nearest list; constant 1 when ``n_probe=1``). Because the
+    top-n lists are a PREFIX of the same (csim desc, centroid_id asc)
+    ranking for every n, one max-setting assignment with ranks serves a
+    whole n_probe sweep: filter ``probe_rank <= n`` reproduces the
+    n-probe assignment exactly (the r15 single-pass rewrite of
+    ivf_nprobe_recall_curve).
 
     Plan: broadcast the (tiny) centroid set, one pass over the corpus.
     The corpus path (``n_probe=1``) is a min-of-struct aggregate (the
@@ -389,7 +359,9 @@ def ivf_assign(
     )
     if n_probe == 1:
         # argmax csim (ties -> lower centroid id) == min of (-csim, cid);
-        # -x on a rounded double is exact, so ordering matches the window
+        # -x on a rounded double is exact, so ordering matches the window.
+        # lit(1) is an int, the type of the window path's row_number()
+        rank = [F.lit(1).alias("probe_rank")] if with_rank else []
         return (
             scored.groupBy("_vid")
             .agg(
@@ -400,6 +372,7 @@ def ivf_assign(
             .select(
                 F.col("_vid").alias(id_col),
                 F.col("_m.centroid_id").alias("centroid_id"),
+                *rank,
             )
         )
     w = Window.partitionBy("_vid").orderBy(F.col("_csim").desc(), F.col("centroid_id"))
@@ -1120,7 +1093,6 @@ def ivf_pq_build(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = False,
 ):
     """Train the full IVF_PQ index: coarse Lloyd k-means, residual
     computation, per-subspace PQ codebooks on the residuals, byte codes.
@@ -1131,45 +1103,25 @@ def ivf_pq_build(
     (id, sub_id, code). All deterministic (lowest-id seeding, 6-decimal
     mean rounding) — a serial engine reproduces every table exactly.
 
-    All four outputs are PERSISTED (registered in _SIM_CACHES): the
-    query path consumes each at least once and recall-style evaluations
-    consume them repeatedly; without the persist every consumer re-runs
-    the full training lineage. At 100 TB these are the index tables a
-    real build WRITES (codes are corpus x m bytes, the rest
-    catalog-sized) — caching here is the local stand-in for that
-    materialization.
+    All four outputs are PERSISTED: the query path consumes each at
+    least once and recall-style evaluations consume them repeatedly;
+    without the persist every consumer re-runs the full training lineage
+    (the scan-node audit counted 82 parquet scans in one unpersisted
+    ivf_pq query plan). At 100 TB these are the index tables a real
+    build WRITES (codes are corpus x m bytes, the rest catalog-sized) —
+    caching here is the local stand-in for that materialization.
 
-    ``checkpoint=True`` additionally TRUNCATES lineage (eager
-    localCheckpoint instead of persist) so downstream probe plans treat
-    the index as four leaf tables. MEASURED AND REJECTED for the suite
-    path (r11, SCALE.md §5r): a first unbalanced A/B read -17 % at
-    sf0.1, but the balanced protocol (B A A B B A A B B A, canary per
-    iteration, stable VM window) measured persist 3.8 s vs checkpoint
-    7.7 s median — checkpointed leaves surface as stats-less
-    LogicalRDDs, so Catalyst loses size estimates and exchange reuse
-    across the probe/recall joins, which costs roughly 2x what lineage
-    re-planning saves. The parameter stays for callers that genuinely
-    need a plan-depth cut (the §5o iterative-graph rule, where lineage
-    DOUBLES per round); results are identical either way. Release is
-    explicit on both branches: CacheRegistry.release() also drops
-    localCheckpoint RDD blocks (r11 ADVICE — plain unpersist left them
-    to ContextCleaner GC), so the next build call frees the prior
-    build's storage deterministically.
+    Persist, not an eager localCheckpoint of all four outputs: MEASURED
+    AND REJECTED (r11, SCALE.md §5r). The balanced protocol (B A A B B
+    A A B B A, canary per iteration, stable VM window) measured persist
+    3.8 s vs checkpoint 7.7 s median at sf0.1 — checkpointed leaves
+    surface as stats-less LogicalRDDs, so Catalyst loses size estimates
+    and exchange reuse across the probe/recall joins, which costs
+    roughly 2x what lineage re-planning saves.
     """
-    release_similarity_caches()  # prior query's build frames consumed
-
-    def _pin(df: DataFrame) -> DataFrame:
-        # checkpoint=True swaps persist for an eager localCheckpoint:
-        # same storage, but lineage is TRUNCATED, so the probe phase
-        # plans against four leaf tables instead of re-planning the
-        # whole Lloyd/PQ training graph into its (186-exchange) plan —
-        # the measured graph-family rule (ROUND_NOTES r10) applied to
-        # the index build/probe boundary.
-        return df.localCheckpoint() if checkpoint else df.persist()
-
     # NOTE (measured r15, do not re-try): eagerly localCheckpoint-ing
     # ONLY the catalog-sized outputs (coarse, codebooks) — the surgical
-    # variant of the r11-rejected checkpoint=True, with explicit
+    # variant of the r11-rejected whole-build checkpoint, with explicit
     # broadcast hints at every consumer so no join could degrade — was
     # A/B'd and REGRESSED ivf_pq_recall 1.67x (3.96 -> 6.60 s median,
     # 4 interleaved pairs at sf0.1). Same failure mode as the pq_train
@@ -1177,11 +1129,11 @@ def ivf_pq_build(
     # eager jobs serialize the training chain into separate actions and
     # forfeit the one-action composite's scan/exchange/cache sharing,
     # costing ~2.5 s against the ~1 s of saved Catalyst re-planning.
-    coarse = _pin(ivf_train(
+    coarse = ivf_train(
         vectors, k=k_coarse, iters=coarse_iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
-    ))
-    assigned = _pin(_l2_assign_one(vectors, coarse, id_col, vec_col))
+    ).persist()
+    assigned = _l2_assign_one(vectors, coarse, id_col, vec_col).persist()
     resid = (
         vectors.select(
             F.col(id_col),
@@ -1208,14 +1160,13 @@ def ivf_pq_build(
     # pq_train's iterations and pq_encode) was a wash — interleaved A/B
     # 1.02 at sf0.1; behind the persisted `assigned` its recompute is one
     # cheap join and Catalyst already reuses the exchange.
-    codebooks = _pin(pq_train(
+    codebooks = pq_train(
         resid, m=m, k=k_pq, iters=pq_iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
-    ))
-    codes = _pin(pq_encode(
+    ).persist()
+    codes = pq_encode(
         resid, codebooks, m=m, dim=dim, id_col=id_col, vec_col=vec_col
-    ))
-    _SIM_CACHES.extend([coarse, assigned, codebooks, codes])
+    ).persist()
     return coarse, assigned, codebooks, codes
 
 
@@ -1384,17 +1335,12 @@ def mmr_rerank(
     unrecoverable (re-call to recompute) rather than
     lineage-recomputable; deliberate for pool-sized reranks.
     """
-    # release only MMR's OWN prior pool — never the shared build registry:
-    # a caller may hand us candidates derived lazily from ivf_pq_build
-    # outputs that are still persisted in _SIM_CACHES (ADVICE r7)
-    _MMR_CACHES.release()
     remaining = candidates.select(
         F.col(id_col).alias("_id"), F.col(sim_col).alias("_sim")
     ).persist()
     pw = pairwise.select(
         F.col("a").alias("_pa"), F.col("b").alias("_pb"), F.col("psim").alias("_ps")
     ).persist()
-    _MMR_CACHES.extend([remaining, pw])
     picks: list[DataFrame] = []
     selected: DataFrame | None = None
     for rank in range(1, k + 1):

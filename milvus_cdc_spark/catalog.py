@@ -98,38 +98,27 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     ``spark.createDataFrame(list, schema)`` backs the frame with a
     pickled Python RDD, so EVERY downstream action pays a Python-worker
     roundtrip — measured 0.44-3.3 s per action for a 500-row frame vs
-    0.20-0.28 s via a pandas/Arrow-backed local table (r13; the same
+    0.20-0.28 s via an Arrow-backed local table (r13; the same
     mechanism measured 4.6 s/batch in the streaming positions A/B,
     SCALE.md §5t). Control-plane dims (drop cutoffs, union-find results,
     name mappings) are built once and joined repeatedly, so the backing
-    matters. Rows are materialized into a pandas frame column-wise; the
-    explicit DDL schema pins types exactly as before (including empty
-    input).
+    matters.
 
-    Integral and boolean columns get pandas NULLABLE dtypes derived
-    from the DDL schema (ADVICE r13): a plain ``pd.DataFrame`` coerces
-    a bigint column containing a NULL to float64, silently corrupting
-    values above 2^53 (ns-epoch timestamps live well above it) through
-    the Arrow float→int64 cast. Every other type keeps object dtype so
-    Arrow converts the original Python values under the schema.
+    Rows become a ``pyarrow.Table`` typed column-wise by the DDL schema,
+    which Spark ingests as Arrow whatever the session's
+    ``arrow.pyspark.enabled`` setting. A NULL in an integral column stays
+    NULL and a bigint above 2^53 (ns-epoch timestamps live well above
+    it) stays exact: no pandas dtype, and so no float64 detour, is
+    involved. Empty input keeps the schema's types.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    _nullable = {
-        T.ByteType: "Int8",
-        T.ShortType: "Int16",
-        T.IntegerType: "Int32",
-        T.LongType: "Int64",
-        T.BooleanType: "boolean",
-    }
-    fields = T.StructType.fromDDL(schema).fields
+    struct = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
     data = [tuple(r) for r in rows]
-    cols = {
-        f.name: pd.Series(
-            [r[i] for r in data],
-            dtype=_nullable.get(type(f.dataType), object),
-        )
-        for i, f in enumerate(fields)
-    }
-    pdf = pd.DataFrame(cols, columns=[f.name for f in fields])
-    return spark.createDataFrame(pdf, schema)
+    table = pa.table(
+        {f.name: [r[i] for r in data] for i, f in enumerate(struct.fields)},
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -20,21 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
-# Aggregate frames persisted by replay_alive_with_drops for reuse across
-# its three consumers (two cutoff dims + the final filter). Contract
-# (the windows.py _RANK_CACHES pattern): callers own the release point;
-# an unpersisted recompute walks the identical deterministic plan, so
-# releasing early only costs recompute, never correctness.
-_APPLY_CACHES = CacheRegistry("apply_caches")
-
-
-def release_apply_caches() -> None:
-    """Unpersist aggregate frames cached by prior replay_alive_with_drops
-    calls."""
-    _APPLY_CACHES.release()
-
 
 def replay_alive(ops: DataFrame) -> DataFrame:
     """Per-pk conditional aggregate → alive rows after full replay.
@@ -102,7 +87,6 @@ def replay_alive_with_drops(ops: DataFrame) -> DataFrame:
         )
         .persist()
     )
-    _APPLY_CACHES.append(agg0)
     part_drops = (
         agg0.filter(F.col("_pdt0").isNotNull())
         .groupBy("collection", "partition")

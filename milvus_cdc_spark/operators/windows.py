@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
 
 def pack_sort_keys(ts_col: str = "ts", op_col: str = "op_type") -> list:
     """W1: sort msgs by BeginTs with Delete before Insert on equal ts
@@ -54,25 +52,6 @@ def monotonic_rebase(
     )
 
 
-# Cached range-ranked frames from distributed_ntile / distributed_row_number.
-# The cache is load-bearing for correctness, not just speed: the driver-side
-# offsets are computed from the SAME materialized range partitioning the
-# result reads, and an unpersisted recompute could re-sample different range
-# bounds and silently mis-rank. Callers therefore own the release point —
-# call release_rank_caches() once returned frames have been materialized
-# (collected / written), which long-lived sessions should do between queries.
-_RANK_CACHES = CacheRegistry("rank_caches")
-
-
-def release_rank_caches() -> None:
-    """Unpersist intermediates cached by prior distributed_ntile /
-    distributed_row_number calls. Safe once their returned DataFrames have
-    been materialized; re-executing an old returned frame AFTER release
-    recomputes the range shuffle and may mis-rank — treat released results
-    as consumed."""
-    _RANK_CACHES.release()
-
-
 def _range_ranked(df: DataFrame, order_cols: list, n_partitions: int):
     """Shared core of the exact distributed global-rank pattern: returns
     ``(local, rank_expr, total)`` where ``local`` is the persisted
@@ -88,6 +67,12 @@ def _range_ranked(df: DataFrame, order_cols: list, n_partitions: int):
 
     ``order_cols`` must be a total order (include a unique tie-break key),
     otherwise boundary rows could land in either range partition.
+
+    ``local`` is persisted for correctness, not just speed: the offsets
+    are computed from the SAME materialized range partitioning the result
+    reads, and an unpersisted recompute could re-sample different range
+    bounds and silently mis-rank. The caller releases it with
+    ``spark.catalog.clearCache()`` once the result is consumed.
     """
     ranged = df.repartitionByRange(n_partitions, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
@@ -95,7 +80,6 @@ def _range_ranked(df: DataFrame, order_cols: list, n_partitions: int):
     local = ranged.withColumn(
         "_lrank", F.row_number().over(Window.partitionBy("_pid").orderBy(*order_cols))
     ).persist()
-    _RANK_CACHES.append(local)
     # per-partition counts → driver-side offsets, the zipWithIndex pattern:
     # ONE row per range partition (control-sized like the pipeline's
     # touched-bucket list), folded back as a literal map so the plan has
@@ -126,7 +110,7 @@ def distributed_row_number(df: DataFrame, order_cols: list,
     force. Used for vocabulary token-id assignment, where a 100 TB corpus
     has 10^7-10^8 distinct terms. Same offsets pattern as
     ``distributed_ntile``; see ``_range_ranked`` for the plan shape and
-    ``release_rank_caches`` for cache lifetime."""
+    cache lifetime."""
     local, rk, _ = _range_ranked(df, order_cols, n_partitions)
     return local.withColumn(rank_col, rk.cast("bigint")).drop("_pid", "_lrank")
 
@@ -144,7 +128,7 @@ def distributed_ntile(df: DataFrame, n: int, order_cols: list[str],
     exact fill rule.
 
     ``order_cols`` must be a total order (include a unique tie-break key).
-    Cache lifetime: see ``release_rank_caches``.
+    Cache lifetime: see ``_range_ranked``.
     """
     local, rk, total = _range_ranked(df, order_cols, n_partitions)
     base, rem = total // n, total % n  # first N%n tiles take one extra row
@@ -186,7 +170,7 @@ def distributed_prefix_sum(
     ``order_cols`` must be a total order (include a unique tie-break key)
     and ``value_col`` must already be exact (integer/decimal) — a float
     running sum is order-sensitive and breaks the repo's portable-math
-    contract. Cache lifetime: see ``release_rank_caches``.
+    contract. Cache lifetime: see ``_range_ranked``.
     """
     ranged = df.repartitionByRange(n_partitions, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
@@ -200,7 +184,6 @@ def distributed_prefix_sum(
     local = ranged.withColumn(
         "_lsum", F.coalesce(F.sum(F.col(value_col)).over(w), F.lit(0))
     ).persist()
-    _RANK_CACHES.append(local)
     totals = {
         r._pid: r._tot
         for r in local.groupBy("_pid")

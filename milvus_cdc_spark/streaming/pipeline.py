@@ -253,6 +253,10 @@ class CdcApplyPipeline:
     ``compact_every`` schedules positions compaction (K6 small-file
     control): every K committed batches the per-batch position partitions
     fold into one summary partition.
+
+    ``files_per_trigger`` is how many source files each microbatch admits.
+    Its default changed from 2 to 4: results are the same, and a drain
+    takes about half the batches.
     """
 
     def __init__(self, spark: SparkSession, source_dir: str, work_dir: str,
@@ -301,10 +305,7 @@ class CdcApplyPipeline:
             self._start_pos_df = local_frame(
                 spark, rows, "collection string, vchannel string, start_ts bigint"
             )
-        # measurement override (A/B harness only — production callers
-        # size n_buckets to state volume explicitly)
-        env_buckets = os.environ.get("SPARK_GRAFT_CDC_BUCKETS")
-        self.n_buckets = int(env_buckets) if env_buckets else n_buckets
+        self.n_buckets = n_buckets
         # Microbatch granularity (r15 verdict #7): how many source files
         # each trigger admits. Results are granularity-independent (the
         # state fold is associative and the oracle pins convergence; the
@@ -318,9 +319,7 @@ class CdcApplyPipeline:
         # would stop exercising the incremental merge/resume path the
         # oracle contract exists to pin; 4 keeps ≥2 microbatches.
         # Production sizes this to source arrival rate.
-        # SPARK_GRAFT_CDC_FPT is the measurement override.
-        env_fpt = os.environ.get("SPARK_GRAFT_CDC_FPT")
-        self.files_per_trigger = int(env_fpt) if env_fpt else files_per_trigger
+        self.files_per_trigger = files_per_trigger
         self.compact_every = compact_every
         self.history_keep = history_keep
         # P1 whitelist for this task (reference task-level msg-type config,
@@ -377,10 +376,8 @@ class CdcApplyPipeline:
                 m.setdefault("history", [])
                 # bucket-count pin (ADVICE r14): state rows are placed by
                 # pmod(xxhash64(pk), n_buckets), so resuming an existing
-                # work_dir under a DIFFERENT bucket count (constructor
-                # change or the SPARK_GRAFT_CDC_BUCKETS measurement
-                # override) silently misroutes every subsequent probe and
-                # merge. Legacy manifests without the key adopt the
+                # work_dir under a DIFFERENT bucket count silently
+                # misroutes every subsequent probe and merge. Legacy manifests without the key adopt the
                 # current count (their state was written by this
                 # process's ancestors under the same default); a recorded
                 # mismatch is a hard refuse.
@@ -390,7 +387,7 @@ class CdcApplyPipeline:
                         f"state dir {self.state_dir} was written with "
                         f"n_buckets={recorded}; this pipeline is configured "
                         f"with n_buckets={self.n_buckets} — resume with the "
-                        "recorded bucket count (check SPARK_GRAFT_CDC_BUCKETS)"
+                        "recorded bucket count"
                     )
                 return m
         return {
@@ -605,27 +602,24 @@ class CdcApplyPipeline:
             # Within-JVM interleaved A/B at sf0.1 (merge already
             # single-level): streaming_cdc_apply 12.82 -> 10.03 s,
             # streaming_positions 10.92 -> 9.29 s (0.783 / 0.851).
-            # SPARK_GRAFT_CDC_OVERLAP=0 is the serial-path kill switch.
-            overlap = os.environ.get("SPARK_GRAFT_CDC_OVERLAP", "1") != "0"
-            if overlap:
-                from pyspark import InheritableThread
+            from pyspark import InheritableThread
 
-                def _write_positions():
-                    nonlocal pos_err
-                    try:
-                        ops.groupBy("vchannel").agg(
-                            F.max("ts").alias("position_ts"),
-                            F.count("*").alias("n_msgs"),
-                        ).write.mode("overwrite").parquet(
-                            os.path.join(
-                                self.positions_dir, f"batch_id={batch_id}"
-                            )
+            def _write_positions():
+                nonlocal pos_err
+                try:
+                    ops.groupBy("vchannel").agg(
+                        F.max("ts").alias("position_ts"),
+                        F.count("*").alias("n_msgs"),
+                    ).write.mode("overwrite").parquet(
+                        os.path.join(
+                            self.positions_dir, f"batch_id={batch_id}"
                         )
-                    except BaseException as e:  # re-raised pre-commit
-                        pos_err = e
+                    )
+                except BaseException as e:  # re-raised pre-commit
+                    pos_err = e
 
-                pos_thread = InheritableThread(target=_write_positions)
-                pos_thread.start()
+            pos_thread = InheritableThread(target=_write_positions)
+            pos_thread.start()
             # buckets present in THIS batch — the only state partitions the
             # merge reads and rewrites (driver list, bounded by n_buckets)
             touched = sorted(
@@ -663,25 +657,17 @@ class CdcApplyPipeline:
                 repaired.write.mode("overwrite").parquet(
                     os.path.join(self.mirror_dir, f"batch_id={batch_id}")
                 )
-            # position write-back AFTER successful apply (reference ordering);
-            # per-batch partition dir + overwrite = idempotent under replay.
-            # Measured (r13 A/B, SCALE.md §5t): this distributed
+            # positions land before the commit point below (reference
+            # ordering: write-back after apply); per-batch partition dir +
+            # overwrite = idempotent under replay. Measured (r13 A/B, SCALE.md §5t): this distributed
             # groupBy-over-the-cached-batch is ~0.2 s/batch; folding the
             # aggregate into the control collect and writing the rows from
             # a driver createDataFrame costs ~4.6 s/batch — a Python-
             # parallelize-backed write pays a Python-worker roundtrip the
             # JVM-side aggregate never does. Keep the distributed form.
-            if pos_thread is not None:
-                pos_thread.join()
-                if pos_err is not None:
-                    raise pos_err
-            else:
-                positions = ops.groupBy("vchannel").agg(
-                    F.max("ts").alias("position_ts"), F.count("*").alias("n_msgs")
-                )
-                positions.write.mode("overwrite").parquet(
-                    os.path.join(self.positions_dir, f"batch_id={batch_id}")
-                )
+            pos_thread.join()
+            if pos_err is not None:
+                raise pos_err
             t_positions = time.time()
         finally:
             # a state-write failure must not leave the positions thread

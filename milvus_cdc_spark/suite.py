@@ -11,6 +11,14 @@ extensions). Each entry pairs
 with identical output column names (the driver's comparator sorts columns by
 name and hash-compares values). Floating-point aggregates are rounded on
 BOTH sides so double summation-order noise can't flip the hash.
+
+Cache contract: a query build may persist intermediates that its
+returned DataFrame reads lazily, so the build cannot release them
+itself. The caller releases them with ``spark.catalog.clearCache()`` once
+the result is consumed (collected or written). Spark's block manager may
+also evict them by LRU when storage memory is short. ``localCheckpoint``
+blocks are not in that cache; the ContextCleaner frees them once the
+returned DataFrame is dropped.
 """
 
 from __future__ import annotations
@@ -23,7 +31,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
 from milvus_cdc_spark.catalog import local_frame as _local_frame
 
 from milvus_cdc_spark import catalog, oplog
@@ -56,27 +63,6 @@ def q(name: str, oracle: str | None, *tags: str):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.load_table(spark, sf_dir, name)
-
-
-# Frames persisted by individual suite queries whose expensive lineage
-# feeds multiple consumers (same release contract as the
-# dedup/graph/similarity/textrank module registries: the next caching
-# query releases the prior one's frames; an early release only costs
-# recompute, never correctness).
-SUITE_CACHES = CacheRegistry("suite_caches")
-
-
-def cache_frame(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for release by the next caching
-    query. Callers invoke :func:`release_suite_caches` at query entry."""
-    cached = df.persist()
-    SUITE_CACHES.append(cached)
-    return cached
-
-
-def release_suite_caches() -> None:
-    """Unpersist frames cached by prior suite queries."""
-    SUITE_CACHES.release()
 
 
 # ---------------------------------------------------------------------------
@@ -225,7 +211,6 @@ def partition_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-aggregate pass keyed (collection, partition, pk) + two
     broadcast joins against catalog-sized drop cutoffs read back out of
     the persisted aggregate."""
-    apply_op.release_apply_caches()  # prior replay query's frames consumed
     ops = oplog.derive_oplog(_t(spark, sf_dir, "lineitem"), widen=True).withColumn(
         "partition",
         F.concat(F.lit("p_"), (F.col("pk") % 2).cast("string")),

@@ -90,8 +90,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetrized customer-supplier co-order graph."""
     from milvus_cdc_spark.analytics import graph
 
-    graph.release_graph_caches()  # prior graph query's frames are consumed
-
     # Range predicate, not year() == 1995: a raw-column comparison reaches
     # the parquet scan as a min/max row-group filter (PushedFilters), which
     # F.year(col) — a function over the column — never does. Same rows.
@@ -877,21 +875,17 @@ def kcore_prune_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nodes/edges surviving each of 3 rounds of degree->=-4 pruning on
     the 1995 trade graph.
 
-    Iteration state is EAGER ``localCheckpoint`` per round, not
-    SUITE_CACHES persists (round-9 verdict "what's wrong" #2: the old
-    persists drained only at the NEXT suite caching query's entry, so a
-    caller whose last query was kcore stranded six edge frames until
-    clearCache). localCheckpoint both truncates the per-round lineage
-    (no exponential recompute across rounds) and scopes the blocks to
-    the returned DataFrame — the ContextCleaner reclaims them when the
-    caller drops the result, with no registry to drain. The FINAL
-    round's frames stay lazy so the returned plan keeps the real
-    join/aggregate shape (the Lloyd-iteration pattern, SCALE.md §5l);
-    its ``alive`` re-derives from the checkpointed previous edge list
-    (≤3 cheap aggregates over the smallest, fully-pruned frame). On a
-    cluster, localCheckpoint trades replication for lineage truncation:
-    an executor loss fails-and-reruns the query, acceptable for a
-    3-round convergence report.
+    Iteration state is EAGER ``localCheckpoint`` per round, not persists:
+    localCheckpoint both truncates the per-round lineage (no exponential
+    recompute across rounds) and scopes the blocks to the returned
+    DataFrame — the ContextCleaner reclaims them when the caller drops
+    the result. The FINAL round's frames stay lazy so the returned plan
+    keeps the real join/aggregate shape (the Lloyd-iteration pattern,
+    SCALE.md §5l); its ``alive`` re-derives from the checkpointed previous
+    edge list (≤3 cheap aggregates over the smallest, fully-pruned
+    frame). On a cluster, localCheckpoint trades replication for lineage
+    truncation: an executor loss fails-and-reruns the query, acceptable
+    for a 3-round convergence report.
     """
     # Range predicate, not year() == 1995: a raw-column comparison reaches
     # the parquet scan as a min/max row-group filter (PushedFilters), which
@@ -1007,9 +1001,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # the per-source shingle set feeds THREE consumers (both pair sides
     # + the per-source counts) — persist so the shingle explode and its
-    # distinct shuffle run once (dedup cache contract: released by the
-    # next dedup query)
-    dedup.release_dedup_caches()
+    # distinct shuffle run once
     sh = (
         dedup.shingle_rows(docs, n=3)
         .join(F.broadcast(docs.select("doc_id", "source")), "doc_id")
@@ -1017,7 +1009,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    dedup._DEDUP_CACHES.append(sh)
     per_src = sh.groupBy("source").agg(F.count("*").alias("c"))
     x = sh.select(F.col("source").alias("source_a"), "k")
     y = sh.select(F.col("source").alias("source_b"), "k")

@@ -792,7 +792,8 @@ def test_ivf_assign_with_rank_prefix_property(spark):
         [(10, [2.0, 0.1]), (11, [0.1, 3.0]), (12, [-0.5, 0.5])],
         "vec_id int, embedding array<double>",
     )
-    ranked = ivf_assign(vecs, cents, n_probe=4, with_rank=True).collect()
+    ranked_df = ivf_assign(vecs, cents, n_probe=4, with_rank=True)
+    ranked = ranked_df.collect()
     per_vec = {}
     for r in ranked:
         per_vec.setdefault(r.vec_id, []).append(r.probe_rank)
@@ -806,6 +807,15 @@ def test_ivf_assign_with_rank_prefix_property(spark):
             for r in ivf_assign(vecs, cents, n_probe=n).collect()
         }
         assert via_rank == direct, (n, via_rank, direct)
+        # with_rank holds on every path, n=1's aggregate path included:
+        # same rows, same probe_rank type as the window path
+        direct_ranked = ivf_assign(vecs, cents, n_probe=n, with_rank=True)
+        assert direct_ranked.schema["probe_rank"].dataType == (
+            ranked_df.schema["probe_rank"].dataType
+        ), n
+        assert {tuple(r) for r in direct_ranked.collect()} == {
+            tuple(r) for r in ranked if r.probe_rank <= n
+        }, n
 
 
 def test_ivf_assign_degenerate_vectors_rank_last_in_both_paths(spark):
@@ -1121,15 +1131,11 @@ def test_embedding_near_dup_banding_and_verify(spark):
 
 def test_embedding_near_dup_respects_caller_cache(spark):
     """ADVICE r7: a caller-persisted input must survive the call — the
-    function must neither re-persist it (raises at a non-default level)
-    nor register it for the next call's release (which would silently
-    drop the caller's own cache; levels are not refcounted)."""
+    function must not re-persist it (raises at a non-default level) nor
+    change the caller's chosen storage level."""
     from pyspark import StorageLevel
 
-    from milvus_cdc_spark.analytics.dedup import (
-        embedding_near_dup,
-        release_dedup_caches,
-    )
+    from milvus_cdc_spark.analytics.dedup import embedding_near_dup
 
     dim = 16
     base = [float((i % 5) + 1) / 5.0 for i in range(dim)]
@@ -1141,9 +1147,6 @@ def test_embedding_near_dup_respects_caller_cache(spark):
         assert got.count() == 1
         # the caller's cache must still be registered at ITS chosen level
         assert df.storageLevel.useDisk and not df.storageLevel.useMemory
-        # and the next dedup call's entry-release must not touch it
-        release_dedup_caches()
-        assert df.storageLevel.useDisk
     finally:
         df.unpersist()
 
@@ -2069,10 +2072,7 @@ def test_distributed_prefix_sum_matches_builtin(spark):
     """distributed_prefix_sum == the global-window running sum for both
     frame variants, on data with heavy duplicate order values (unique
     tie-break key) and negative values."""
-    from milvus_cdc_spark.operators.windows import (
-        distributed_prefix_sum,
-        release_rank_caches,
-    )
+    from milvus_cdc_spark.operators.windows import distributed_prefix_sum
     from pyspark.sql import Window
 
     df = spark.range(507).select(
@@ -2097,19 +2097,14 @@ def test_distributed_prefix_sum_matches_builtin(spark):
                 df, ["v", "id"], "x", n_partitions=8, inclusive=inclusive
             ).collect()
         }
-        release_rank_caches()
         assert got == want, f"inclusive={inclusive}"
 
 
 def test_distributed_prefix_sum_empty_input(spark):
-    from milvus_cdc_spark.operators.windows import (
-        distributed_prefix_sum,
-        release_rank_caches,
-    )
+    from milvus_cdc_spark.operators.windows import distributed_prefix_sum
 
     df = spark.range(0).select(F.col("id"), F.lit(1).alias("x"))
     assert distributed_prefix_sum(df, ["id"], "x").count() == 0
-    release_rank_caches()
 
 
 def test_asof_union_join_semantics(spark):
@@ -2314,38 +2309,82 @@ def test_silhouette_matches_python_reference_property(spark):
 
 
 def test_cache_registries_release_on_next_build(spark, sf_dir):
-    """The release-at-next-build contract actually releases: running a
-    cache-registering query twice leaves exactly one generation of
-    frames in each registry (no unbounded growth across a long driver
-    session), and the release call empties it."""
+    """Cache contract (suite.py): a query build may persist
+    intermediates, and the caller releases them with
+    ``spark.catalog.clearCache()`` once the result is consumed. Running a
+    query twice returns the same rows, and after the caller's clearCache
+    Spark's cache manager is empty — every operator cache is reachable
+    by that one release. fulltext_sparse_search adds the persisted
+    bm25_index (bm25_topk scores without it)."""
     from milvus_cdc_spark import suite as s
-    from milvus_cdc_spark.analytics import similarity, textrank
 
-    q = s.QUERIES["pq_adc_recall"].fn
-    q(spark, sf_dir).count()
-    first = list(similarity._SIM_CACHES)
-    q(spark, sf_dir).count()
-    second = list(similarity._SIM_CACHES)
-    assert len(second) == len(first)  # one generation, not two
-    assert not any(df is old for df in second for old in first)
-    similarity.release_similarity_caches()
-    assert not similarity._SIM_CACHES
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name in (
+        "pq_adc_recall",
+        "bm25_topk",
+        "fulltext_sparse_search",
+        "pipeline_stage_accounting",
+    ):
+        q = s.QUERIES[name].fn
+        first = sorted(map(repr, q(spark, sf_dir).collect()))
+        second = sorted(map(repr, q(spark, sf_dir).collect()))
+        assert first == second, name
+    assert not cache_manager.isEmpty()  # the builds did persist
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
 
-    q2 = s.QUERIES["bm25_topk"].fn
-    q2(spark, sf_dir).count()
-    n1 = len(textrank._TEXT_CACHES)
-    q2(spark, sf_dir).count()
-    assert len(textrank._TEXT_CACHES) == n1
-    textrank.release_text_caches()
-    assert not textrank._TEXT_CACHES
 
-    q3 = s.QUERIES["pipeline_stage_accounting"].fn
-    q3(spark, sf_dir).count()
-    n1 = len(s.SUITE_CACHES)
-    q3(spark, sf_dir).count()
-    assert len(s.SUITE_CACHES) == n1
-    s.release_suite_caches()
-    assert not s.SUITE_CACHES
+def test_concurrent_families_interleaved(spark, sf_dir):
+    """Two persisting families (dedup + similarity) run concurrently on
+    one SparkSession, interleaved so each materializes its result while
+    the other's build frames are live. Both must give the answers of a
+    serial run on the main thread.
+
+    The barrier forces the interleaving: each thread builds (persists
+    included), waits for the other to ALSO have built, then materializes.
+    """
+    import threading
+
+    from milvus_cdc_spark.analytics import dedup, similarity
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+    def dedup_query():
+        sh = dedup.shingle_rows(docs, "doc_id", "text", n=3)
+        return dedup.set_similarity_join(
+            sh, threshold_ppm=500000, id_col="doc_id", item_col="s"
+        )
+
+    def sim_query():
+        return similarity.ivf_train(emb, k=4, iters=2, vec_col="embedding")
+
+    built = threading.Barrier(2, timeout=120)
+    results: dict[str, int] = {}
+    errors: list[Exception] = []
+
+    def run(name, build):
+        try:
+            out = build()
+            built.wait()
+            results[name] = out.count()
+        except Exception as e:  # surfaced to the main thread below
+            errors.append(e)
+            built.abort()
+
+    threads = [
+        threading.Thread(target=run, args=("dedup", dedup_query)),
+        threading.Thread(target=run, args=("sim", sim_query)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert results["dedup"] == dedup_query().count()
+    assert results["sim"] == sim_query().count()
     spark.catalog.clearCache()
 
 
@@ -2443,7 +2482,6 @@ def test_rank_join_lag_equals_window_lag_with_gaps(spark):
             .collect()
         }
         assert got == expected, (trial, sorted(got), sorted(expected))
-        windows.release_rank_caches()
 
 
 def test_confusion_matrix_unpivot_equals_class_cross(spark):

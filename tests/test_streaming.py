@@ -44,23 +44,15 @@ def test_streaming_apply_converges_to_batch_replay(spark, sf_dir, oplog_dir):
 
 
 def test_files_per_trigger_sets_granularity_not_results(spark, oplog_dir):
-    """r15 verdict #7: microbatch granularity (files_per_trigger, env
-    override SPARK_GRAFT_CDC_FPT) changes how many batches a drain takes,
-    never the converged state."""
-    import os
-
+    """r15 verdict #7: microbatch granularity (files_per_trigger) changes
+    how many batches a drain takes, never the converged state."""
     work1 = tempfile.mkdtemp(prefix="fpt_a_")
     pipe = CdcApplyPipeline(spark, oplog_dir, work1, files_per_trigger=3)
     pipe.run_available_now()
     assert pipe.last_batch_id == 1  # 6 staged files / 3 per trigger
 
     work2 = tempfile.mkdtemp(prefix="fpt_b_")
-    os.environ["SPARK_GRAFT_CDC_FPT"] = "6"
-    try:
-        pipe2 = CdcApplyPipeline(spark, oplog_dir, work2, files_per_trigger=3)
-    finally:
-        del os.environ["SPARK_GRAFT_CDC_FPT"]
-    assert pipe2.files_per_trigger == 6  # env override wins
+    pipe2 = CdcApplyPipeline(spark, oplog_dir, work2, files_per_trigger=6)
     pipe2.run_available_now()
     assert pipe2.last_batch_id == 0
 
@@ -1740,10 +1732,9 @@ def test_positions_hide_uncommitted_batch(spark, monkeypatch):
 
 def test_resume_refuses_bucket_count_change(spark):
     """ADVICE r14: state rows are placed by pmod(xxhash64, n_buckets) —
-    resuming a work_dir under a different bucket count (constructor or
-    SPARK_GRAFT_CDC_BUCKETS) would silently misroute every probe/merge
-    against the existing state. The manifest records n_buckets; a
-    mismatch on resume is a hard refuse."""
+    resuming a work_dir under a different bucket count would silently
+    misroute every probe/merge against the existing state. The manifest
+    records n_buckets; a mismatch on resume is a hard refuse."""
     from milvus_cdc_spark.streaming import pipeline as pipeline_mod
 
     tmp = tempfile.mkdtemp(prefix="test_bucket_pin_")

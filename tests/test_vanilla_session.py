@@ -56,6 +56,7 @@ for name in (
     "cdc_replay_summary",       # bug 2: integer-sum dtype drift
     "metrics_counters",         # bug 2
     "ready_set_equality",       # bug 3: array columns
+    "partition_drop_replay",    # NULL bigint drop cutoffs (local_frame)
 ):
     spec = suite.QUERIES[name]
     spdf = spec.fn(spark, SF_DIR).toPandas()
